@@ -83,7 +83,7 @@ object Bench {
     * synthetic log + cached landing, so the parent keeps them in one chunk.
     */
   private val pipelineNames = Seq(
-    "pipeline_parse_1h_log", "pipeline_parse_dsv2", "pipeline_parse_flatmap",
+    "pipeline_parse_1h_log", "pipeline_parse_flatmap",
     "pipeline_stationary", "pipeline_autopilot")
 
   def main(args: Array[String]): Unit = {
@@ -320,13 +320,6 @@ object Bench {
       ("pipeline_parse_1h_log", () => timed("pipeline_parse_1h_log") {
         graft.pipelines.CanPipelines
           .parseToLanding(graft.decode.CanDecode.decodeFiles(spark, logDir))
-          .write.format("noop").mode("overwrite").save()
-      }),
-      // explicit DSv2 entry (same path decodeFiles now defaults to — kept
-      // for round-over-round continuity of the name)
-      ("pipeline_parse_dsv2", () => timed("pipeline_parse_dsv2") {
-        graft.pipelines.CanPipelines
-          .parseToLanding(graft.decode.CanDecode.decodeFilesV2(spark, logDir))
           .write.format("noop").mode("overwrite").save()
       }),
       // legacy binaryFile+flatMap path — measured so the 3x gap that

@@ -18,7 +18,10 @@ import graft.streaming.CanStreams
   *   landing_json/  hourly channelized documents (JSON-compat view)
   *   events/Stationary/  day documents of stationary intervals
   *   events/Autopilot/   day documents of autopilot transitions
-  *   ckpt/      streaming checkpoints (source offsets + pivot state)
+  *   ckpt/parse/  the parse's streaming checkpoint: source offsets (each
+  *                with its batch watermark), commits and query metadata —
+  *                no operator state; the landing table is the only copy of
+  *                the pivoted rows
   *
   * Usage: Jobs (parse|infer|all) <rawDir> <workDir>
   */

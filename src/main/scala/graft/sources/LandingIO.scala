@@ -53,7 +53,9 @@ object LandingIO {
     * writer per outDir assumed, as with MergeSink).
     */
   private def writeDocs(docs: DataFrame, nameCol: String, jsonCol: String, outDir: String): Unit = {
-    if (docs.isEmpty) return // non-empty guard
+    // One pass over `docs`: an up-front emptiness probe would compute the
+    // whole upstream aggregation twice; empty partitions (and so an empty
+    // input) write nothing through the per-partition `rows.nonEmpty` guard.
     // Session Hadoop conf (spark.hadoop.* — s3a credentials etc.) serialized
     // into the closure; executor-side `new Configuration()` only sees
     // classpath XML and would break s3a:// targets.

@@ -1,6 +1,8 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -16,16 +18,18 @@ final case class SpeedSampleWm(key: String, tsSec: Double, speed: Double, ts: ja
 final case class RunState(runStart: Double, lastZero: Double)
 
 /** Structured Streaming twins of the batch pipelines (SURVEY §2.6): file
-  * sources replace the SNS/SQS hops, the 1.2 s watermark replaces MAX_SR's
-  * hand-rolled out-of-order buffer (reference
+  * sources replace the SNS/SQS hops, the parse's 1.2 s watermark replaces
+  * MAX_SR's hand-rolled out-of-order buffer (reference
   * parse_canserver_filtered_log.py:117,272-282), flatMapGroupsWithState
   * carries prev-value state ACROSS files (fixing the reference's lost
   * cross-file edges, SURVEY §2.7-9), and every sink is an idempotent
   * partitioned merge (MergeSink).
   *
   * `Trigger.AvailableNow` is the serverless-style scheduling analogue: each
-  * invocation drains whatever objects have landed and exits; checkpoints
-  * carry source offsets and operator state between invocations.
+  * invocation drains whatever objects have landed and exits. The parse is
+  * stateless — its checkpoint carries source offsets and the watermark
+  * between invocations, and the landing table is its only copy of the
+  * pivoted rows; the inference twins carry operator state as well.
   */
 object CanStreams {
 
@@ -79,21 +83,28 @@ object CanStreams {
         .load(rawDir))
   }
 
-  /** Watermarked per-epoch pivot: the streaming form of CanPipelines.pivot.
-    * State is one wide row per live epoch, evicted 1.2 s (event time) after
-    * the epoch — exactly the reference's bounded out-of-order buffer.
+  /** Pivoted signal columns of the landing table, in column order. */
+  private val Signals = Seq(
+    "long_acc", "lat_acc", "vert_acc",
+    "yaw_rate", "pitch_rate", "roll_rate",
+    "lat", "long", "speed", "ap_status")
+
+  /** Pivot `fresh` decoded frames into the landing rows `old` already holds
+    * for the same partitions: ONE aggregation per epoch key, where each
+    * signal keeps the old non-null value and otherwise takes the first
+    * non-null new one. Old rows no new frame touches come out unchanged.
     */
-  def pivotStream(decoded: DataFrame): DataFrame = {
-    val signals = Seq(
-      "long_acc", "lat_acc", "vert_acc",
-      "yaw_rate", "pitch_rate", "roll_rate",
-      "lat", "long", "speed", "ap_status")
-    decoded
-      .withWatermark("ts", "1.2 seconds")
-      .groupBy(col("device"), col("ts"), col("epoch_sec"))
-      .agg(
-        first(col(signals.head), ignoreNulls = true).as(signals.head),
-        signals.tail.map(s => first(col(s), ignoreNulls = true).as(s)): _*)
+  private def pivotInto(old: Option[DataFrame], fresh: DataFrame): DataFrame = {
+    val keys = Seq("device", "ts", "epoch_sec", "date", "hour")
+    def tagged(df: DataFrame, pri: Int) =
+      df.select((keys ++ Signals).map(col) :+ lit(pri).as("__pri"): _*)
+    val rows = old.fold(tagged(fresh, 1))(o => tagged(o, 0).unionByName(tagged(fresh, 1)))
+    def pick(s: String) = coalesce(
+      first(when(col("__pri") === 0, col(s)), ignoreNulls = true),
+      first(when(col("__pri") === 1, col(s)), ignoreNulls = true)).as(s)
+    rows
+      .groupBy(keys.map(col): _*)
+      .agg(pick(Signals.head), Signals.tail.map(pick): _*)
       // same unit annotations as the batch pivot (landing schema parity)
       .withColumn("acc_unit", when(col("long_acc").isNotNull, "m/s^2"))
       .withColumn("gyro_unit", when(col("yaw_rate").isNotNull, "rad/s"))
@@ -101,10 +112,39 @@ object CanStreams {
   }
 
   /** Parse stage as a runnable job: raw logs -> pivoted landing table
-    * (parquet, partitioned by date/hour, merged idempotently on epoch).
+    * (parquet, partitioned by date/hour, one row per (device, epoch)).
+    *
+    * STATELESS: the query keeps no operator state. Each micro-batch
+    *  1. drops LATE frames — `ts` <= the batch's watermark (max event time
+    *     of earlier batches minus 1.2 s, the reference's MAX_SR bounded
+    *     out-of-order buffer). The watermark is read from the query's
+    *     offset log, so a replayed batch drops exactly the same frames;
+    *  2. rewrites the (date, hour) partitions its frames touch as one
+    *     aggregation over their old rows plus the new frames (an old
+    *     non-null signal wins, a new one fills a null), committed through
+    *     MergeSink's crash-safe partition swap. A replay re-merges the same
+    *     frames into rows that already hold them: a no-op.
+    *
+    * The landing table is the only copy of the pivoted rows. The specs
+    * compare this against the stateful formulation (a streaming
+    * aggregation holding every frame in a state store, evicted by a no-data
+    * batch at the end of each invocation). The two agree wherever an
+    * invocation runs one data batch, as Jobs does. They can differ in ONE
+    * place: under `maxFilesPerTrigger` pacing inside one invocation, a
+    * frame is judged here against the CURRENT batch's watermark, whereas
+    * Spark's stateful operator judged lateness against the PREVIOUS
+    * batch's. A frame of paced batch N that is >= 1.2 s behind the max
+    * event time of batches < N, but < 1.2 s behind that of batches < N-1,
+    * is dropped here and was kept there.
+    *
+    * The checkpoint holds only source offsets (with each batch's
+    * watermark), commits and query metadata. A `state/` subtree written by
+    * the stateful formulation is deleted before the query starts: Spark
+    * refuses to restart a stateless query over it, and every row it held
+    * is already in the landing table.
     *
     * With `landingJsonDir` set, the hourly channelized JSON documents are
-    * maintained INCREMENTALLY: after each upsert, only the (date, hour)
+    * maintained INCREMENTALLY: after each merge, only the (date, hour)
     * partitions touched by the batch are read back (partition-pruned scan)
     * and re-channelized — a full-history rescan per invocation would grow
     * with table age, not batch size.
@@ -115,36 +155,45 @@ object CanStreams {
       landingDir: String,
       checkpointDir: String,
       landingJsonDir: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
-    pivotStream(decodedStream(spark, rawDir, maxFilesPerTrigger))
-      .withColumn("date", to_date(col("ts")))
-      .withColumn("hour", hour(col("ts")))
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
+    val state = new Path(checkpointDir, "state")
+    val fs = state.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(state)) fs.delete(state, true)
+
+    decodedStream(spark, rawDir, maxFilesPerTrigger)
+      .withWatermark("ts", "1.2 seconds")
       .writeStream
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val ss = batch.sparkSession
-        val cached = batch.cache()
+        val watermarkMs = new OffsetSeqLog(ss, s"$checkpointDir/offsets")
+          .offsetSeqMetadataForBatchId(batchId)
+          .fold(0L)(_.batchWatermarkMs)
+        val fresh = batch
+          .filter(col("ts") > timestamp_millis(lit(watermarkMs)))
+          .withColumn("date", to_date(col("ts")))
+          .withColumn("hour", hour(col("ts")))
+          .cache()
         try {
-          MergeSink.upsert(
-            ss, cached, landingDir,
-            keyCols = Seq("device", "epoch_sec"),
-            partitionCols = Seq("date", "hour"))
-          landingJsonDir.foreach { jsonDir =>
-            val dirty = cached.select(col("date"), col("hour")).distinct().collect()
-            if (dirty.nonEmpty) {
-              val pred = dirty
-                .map(r => col("date") === lit(r.getDate(0)) && col("hour") === lit(r.getInt(1)))
-                .reduce(_ || _)
+          val dirty = fresh.select(col("date"), col("hour")).distinct().collect()
+          if (dirty.nonEmpty) {
+            val pred = dirty
+              .map(r => col("date") === lit(r.getDate(0)) && col("hour") === lit(r.getInt(1)))
+              .reduce(_ || _)
+            MergeSink.rewritePartitions(ss, landingDir, Seq("date", "hour")) { old =>
+              Some(pivotInto(old.map(_.filter(pred)), fresh)) // pruned to dirty hours
+            }
+            landingJsonDir.foreach { jsonDir =>
               val touched = ss.read.parquet(landingDir).filter(pred) // pruned
               graft.sources.LandingIO.writeLandingDocs(
                 graft.pipelines.CanPipelines.channelize(touched), jsonDir)
             }
           }
-        } finally cached.unpersist()
+        } finally fresh.unpersist()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 
   // ------------------------------------------------- stateful inference ----
 

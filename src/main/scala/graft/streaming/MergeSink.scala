@@ -23,13 +23,17 @@ import org.apache.spark.sql.functions._
   * Commit protocol (crash-safe): the merge is materialized to a DETERMINISTIC
   * temp sibling (`.graft-tmp-<target>`), then each dirty partition directory
   * is swapped in with two renames, displacing the old copy into
-  * `.graft-old-<target>`. Every upsert begins by RECOVERING any staging dirs
+  * `.graft-old-<target>`. Every commit begins by RECOVERING any staging dirs
   * a crashed commit left behind: a trash leaf whose destination is missing
   * (crash between the two renames) is renamed back, one whose destination
   * exists (new data landed) is dropped — so no commit state is ever
-  * unrecoverable. Deterministic staging names mean concurrent upserts to the
-  * SAME target are not supported (a streaming query runs its batches
+  * unrecoverable. Deterministic staging names mean concurrent commits to
+  * the SAME target are not supported (a streaming query runs its batches
   * serially, which is the intended caller).
+  *
+  * The commit ([[rewritePartitions]]) is separate from the merge rule:
+  * `upsert` is the keyed batch-wins rule; the CAN parse
+  * (CanStreams.runParse) supplies its own.
   */
 object MergeSink {
 
@@ -60,16 +64,10 @@ object MergeSink {
     if (fs.exists(tmp)) fs.delete(tmp, true) // half-written merge output
   }
 
-  /** CONCURRENT READERS: the per-partition two-rename swap is atomic per
-    * partition but not across partitions — a reader scanning WHILE an upsert
-    * commits may observe a mix of new and old partition generations, and
-    * each partition has a brief window (old renamed aside, new not yet in
-    * place) where it is missing entirely. A crash in that window is healed
-    * by the next upsert's recover(), and a crashed batch replay converges
-    * (idempotent merge) — but point-in-time consistency across partitions is
-    * only guaranteed for readers that do not overlap a commit. Gate reads
-    * on a quiesced sink (the AvailableNow drain model) or snapshot the
-    * table first where overlap is possible.
+  /** Idempotent keyed upsert: rows of `batch` replace existing rows with
+    * the same `keyCols` (batch rows win on key collision); every other row
+    * of the partitions the batch touches is kept. Committed through
+    * [[rewritePartitions]].
     *
     * @param compatDropOverlap reference bug-parity mode (SURVEY §2.5): when
     *        true, a batch whose keys OVERLAP existing rows is dropped
@@ -85,7 +83,51 @@ object MergeSink {
       partitionCols: Seq[String],
       compatDropOverlap: Boolean = false): Unit = {
     if (batch.isEmpty) return
+    rewritePartitions(spark, targetDir, partitionCols) {
+      case None => Some(batch)
+      case Some(old) =>
+        val dirty = batch.select(partitionCols.map(col): _*).distinct()
+        val oldDirty = old
+          .join(broadcast(dirty), partitionCols, "left_semi")
+          .select(batch.columns.map(col): _*) // align column order
+        if (compatDropOverlap && !batch.join(oldDirty, keyCols, "left_semi").isEmpty)
+          None // reference semantics: overlapping batch silently skipped
+        else {
+          val w = Window
+            .partitionBy(keyCols.map(col): _*)
+            .orderBy(col("__pri"))
+          Some(batch
+            .withColumn("__pri", lit(0))
+            .unionByName(oldDirty.withColumn("__pri", lit(1)))
+            .withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1)
+            .drop("__pri", "__rn"))
+        }
+    }
+  }
 
+  /** The partition-swap commit, independent of any merge rule. `rewrite`
+    * receives the current table (None before its first write) and returns
+    * the COMPLETE new content of every partition it touches, or None to
+    * leave the table as it is. Partitions absent from its output are not
+    * written.
+    *
+    * CONCURRENT READERS: the per-partition two-rename swap is atomic per
+    * partition but not across partitions — a reader scanning WHILE a commit
+    * runs may observe a mix of new and old partition generations, and
+    * each partition has a brief window (old renamed aside, new not yet in
+    * place) where it is missing entirely. A crash in that window is healed
+    * by the next commit's recover(), and a crashed batch replay converges
+    * (idempotent merge) — but point-in-time consistency across partitions is
+    * only guaranteed for readers that do not overlap a commit. Gate reads
+    * on a quiesced sink (the AvailableNow drain model) or snapshot the
+    * table first where overlap is possible.
+    */
+  def rewritePartitions(
+      spark: SparkSession,
+      targetDir: String,
+      partitionCols: Seq[String])(
+      rewrite: Option[DataFrame] => Option[DataFrame]): Unit = {
     val conf   = spark.sessionState.newHadoopConf()
     val rawTgt = new Path(targetDir)
     val fs     = rawTgt.getFileSystem(conf)
@@ -99,33 +141,14 @@ object MergeSink {
     val existing: Option[DataFrame] =
       try Some(spark.read.parquet(targetDir)) catch { case _: AnalysisException => None }
 
-    existing match {
-      case None =>
-        batch.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(targetDir)
-      case Some(old) =>
-        val dirty = batch.select(partitionCols.map(col): _*).distinct()
-        val oldDirty = old
-          .join(broadcast(dirty), partitionCols, "left_semi")
-          .select(batch.columns.map(col): _*) // align column order
-        if (compatDropOverlap &&
-          !batch.join(oldDirty, keyCols, "left_semi").isEmpty) {
-          return // reference semantics: overlapping batch silently skipped
-        }
-        // batch rows win on key collision
-        val w = Window
-          .partitionBy(keyCols.map(col): _*)
-          .orderBy(col("__pri"))
-        val merged = batch
-          .withColumn("__pri", lit(0))
-          .unionByName(oldDirty.withColumn("__pri", lit(1)))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .drop("__pri", "__rn")
-
+    rewrite(existing).foreach { merged =>
+      if (existing.isEmpty)
+        merged.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(targetDir)
+      else {
         // Two-phase commit: materialize the merge to the temp sibling (the
         // job never deletes data it is still reading), then swap each dirty
         // partition in with renames. On swap failure the exception
-        // propagates with tmp/trash intact — the NEXT upsert's recover()
+        // propagates with tmp/trash intact — the NEXT commit's recover()
         // restores them; nothing is deleted until its replacement is in
         // place.
         merged.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
@@ -142,6 +165,7 @@ object MergeSink {
         }
         fs.delete(trash, true)
         fs.delete(tmp, true)
+      }
     }
   }
 }

@@ -191,38 +191,139 @@ class CanStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  private def speedAt(offsetMs: Int, v: Double): Array[Byte] = frame(offsetMs, 599, 0, speedPayload(v))
+  private def epochOf(t0: Long, offsetMs: Int): Double = (t0 + offsetMs * 1000L).toDouble / 1e6
+  private def landingEpochs(land: String): Seq[Double] =
+    spark.read.parquet(land).select("epoch_sec").collect().map(_.getDouble(0)).toSeq.sorted
+  /** Every landing column, rows in key order. */
+  private def landingRows(land: String): Seq[org.apache.spark.sql.Row] = {
+    val df = spark.read.parquet(land)
+    df.select(df.columns.sorted.map(col): _*).orderBy("device", "epoch_sec").collect().toSeq
+  }
+
   test("pivot watermark: events later than 1.2 s behind the max are dropped (MAX_SR parity)") {
-    import spark.implicits._
-    val ms = MemoryStream[(String, Long, Double)](spark)
-    val decodedLike = ms.toDS()
-      .toDF("device", "sec", "speed")
-      .select(
-        col("device"),
-        timestamp_seconds(col("sec")).as("ts"),
-        col("sec").cast("double").as("epoch_sec"),
-        lit(null).cast("double").as("long_acc"),
-        lit(null).cast("double").as("lat_acc"),
-        lit(null).cast("double").as("vert_acc"),
-        lit(null).cast("double").as("yaw_rate"),
-        lit(null).cast("double").as("pitch_rate"),
-        lit(null).cast("double").as("roll_rate"),
-        lit(null).cast("double").as("lat"),
-        lit(null).cast("double").as("long"),
-        col("speed"),
-        lit(null).cast("string").as("ap_status"))
-    val q = CanStreams
-      .pivotStream(decodedLike)
-      .writeStream.format("memory").queryName("wm_out").outputMode("update").start()
-    try {
-      ms.addData(("d", 1000L, 10.0), ("d", 2000L, 20.0)) // watermark -> 1998.8 s
-      q.processAllAvailable()
-      ms.addData(("d", 1500L, 99.0), ("d", 2001L, 30.0)) // 1500 is ~500 s late
-      q.processAllAvailable()
-      val epochs = spark.table("wm_out").select("epoch_sec").collect().map(_.getDouble(0)).sorted
-      // the in-watermark rows all surface; the late 1500 s row never does
-      assert(epochs.contains(1000.0) && epochs.contains(2000.0) && epochs.contains(2001.0))
-      assert(!epochs.contains(1500.0), "late event leaked past the 1.2 s watermark")
-    } finally q.stop()
+    val t0   = 1700000000L * 1000000L
+    val raw  = Files.createTempDirectory("wmraw").toString
+    val land = Files.createTempDirectory("wmland").toString
+    val ckpt = Files.createTempDirectory("wmckpt").toString
+    Files.write(Paths.get(raw, "a.log"), file(timesync(t0), speedAt(0, 10.0), speedAt(10000, 20.0)))
+    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination() // watermark -> t0 + 8.8 s
+    Files.write(Paths.get(raw, "b.log"), file(timesync(t0), speedAt(5000, 99.0), speedAt(11000, 30.0)))
+    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination() // t0 + 5 s is 5 s late
+    val epochs = landingEpochs(land)
+    // the in-watermark rows all surface; the late t0 + 5 s row never does
+    assert(epochs.contains(epochOf(t0, 0)) && epochs.contains(epochOf(t0, 10000)) &&
+      epochs.contains(epochOf(t0, 11000)))
+    assert(!epochs.contains(epochOf(t0, 5000)), "late event leaked past the 1.2 s watermark")
+  }
+
+  test("runParse watermark: a frame exactly ON the watermark is late; a replayed batch drops the same frames") {
+    val t0   = 1700000000L * 1000000L
+    val raw  = Files.createTempDirectory("wmbraw").toString
+    val land = Files.createTempDirectory("wmbland").toString
+    val ckpt = Files.createTempDirectory("wmbckpt").toString
+    Files.write(Paths.get(raw, "a.log"), file(timesync(t0), speedAt(0, 10.0), speedAt(10000, 20.0)))
+    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination()
+    // batch 1's watermark is t0 + 10 s - 1.2 s = t0 + 8.8 s (ts <= watermark is late)
+    Files.write(Paths.get(raw, "b.log"),
+      file(timesync(t0), speedAt(5000, 99.0), speedAt(8800, 98.0), speedAt(8801, 30.0)))
+    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination()
+    val wm = new org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog(spark, s"$ckpt/offsets")
+      .offsetSeqMetadataForBatchId(1).map(_.batchWatermarkMs)
+    assert(wm === Some(t0 / 1000 + 8800))
+    val expected = Seq(epochOf(t0, 0), epochOf(t0, 8801), epochOf(t0, 10000))
+    assert(landingEpochs(land) === expected)
+    val before = landingRows(land)
+
+    // replay batch 1: drop its commit marker (and the checksum sidecar) and
+    // restart — the batch re-runs from the offset log with the same watermark
+    val commits = Paths.get(ckpt, "commits")
+    val latest = Files.list(commits).iterator().asScala.toSeq
+      .filter(p => p.getFileName.toString.forall(_.isDigit))
+      .maxBy(_.getFileName.toString.toLong)
+    assert(latest.getFileName.toString === "1")
+    Files.delete(latest)
+    Files.list(commits).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.contains(latest.getFileName.toString))
+      .foreach(Files.delete)
+    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination()
+    assert(Files.exists(latest), "the replayed batch did not commit")
+    assert(landingRows(land) === before)
+  }
+
+  /** Three invocations over two devices, with same-timestamp frames across
+    * files (within and across invocations), an in-time frame whose signal
+    * the landing row already holds, late frames and a new hour.
+    */
+  private def invocations(t0: Long): Seq[Seq[(String, Array[Byte])]] = {
+    val t1 = t0 + 3600L * 1000000L
+    Seq(
+      Seq(
+        "dev1/a.log" -> file(timesync(t0), speedAt(0, 10.0), speedAt(1000, 12.0),
+          frame(2000, 921, 0, Array[Byte](2))),
+        "dev1/b.log" -> file(timesync(t0), frame(1000, 921, 0, Array[Byte](3)),
+          frame(3000, 273, 0, Array[Byte](1, 0, 2, 0, 3, 0))),
+        "dev2/a.log" -> file(timesync(t0), speedAt(0, 40.0), speedAt(2000, 44.0))),
+      // watermark t0 + 1.8 s
+      Seq(
+        "dev1/c.log" -> file(timesync(t0), frame(3000, 921, 0, Array[Byte](1)), // merges into t0+3 s
+          speedAt(3000, 50.0), speedAt(1000, 99.0) /* late */, speedAt(2500, 52.0)),
+        "dev2/c.log" -> file(timesync(t0), speedAt(2000, 77.0) /* old value wins */,
+          frame(2000, 921, 0, Array[Byte](3)) /* fills a null */)),
+      // watermark still t0 + 1.8 s: invocation 2's max is t0 + 3 s as well
+      Seq(
+        "dev1/d.log" -> file(timesync(t1), speedAt(0, 5.0), speedAt(500, 6.0)),
+        "dev2/d.log" -> file(timesync(t0), speedAt(1500, 1.0) /* late */, speedAt(2900, 2.0))))
+  }
+
+  private def writeInvocation(raw: String, files: Seq[(String, Array[Byte])]): Unit =
+    files.foreach { case (rel, bytes) =>
+      val p = Paths.get(raw, rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, bytes)
+    }
+
+  test("stateless runParse lands exactly what the stateful pivot formulation lands, invocation by invocation") {
+    val t0 = 1700000000L * 1000000L
+    val (rawS, landS, ckptS) = (Files.createTempDirectory("eqraws").toString,
+      Files.createTempDirectory("eqlands").toString, Files.createTempDirectory("eqckpts").toString)
+    val (rawR, landR, ckptR) = (Files.createTempDirectory("eqrawr").toString,
+      Files.createTempDirectory("eqlandr").toString, Files.createTempDirectory("eqckptr").toString)
+    invocations(t0).zipWithIndex.foreach { case (files, i) =>
+      writeInvocation(rawS, files)
+      writeInvocation(rawR, files)
+      CanStreams.runParse(spark, rawS, landS, ckptS).awaitTermination()
+      StatefulParse.run(spark, rawR, landR, ckptR).awaitTermination()
+      assert(landingRows(landS) === landingRows(landR), s"landing differs after invocation ${i + 1}")
+    }
+    val rows = spark.read.parquet(landS)
+    // the cases the fixture plants actually occurred
+    assert(!landingEpochs(landS).contains(epochOf(t0, 1500)))
+    assert(rows.filter(col("device") === "dev2" && col("epoch_sec") === epochOf(t0, 2000))
+      .select("speed", "ap_status").collect().map(r => (r.getDouble(0), r.getString(1))).toSeq ===
+      Seq((44.0, "ACTIVE_NOMINAL")))
+    assert(rows.filter(col("device") === "dev1" && col("epoch_sec") === epochOf(t0, 1000))
+      .select("speed").collect().map(_.getDouble(0)).toSeq === Seq(12.0))
+    assert(Files.notExists(Paths.get(ckptS, "state")))
+  }
+
+  test("upgrade: a checkpoint written by the stateful parse resumes; landing equals a fresh run") {
+    val t0 = 1700000000L * 1000000L
+    val Seq(first, second, _) = invocations(t0)
+    val (raw, work) = (Files.createTempDirectory("upraw").toString, Files.createTempDirectory("upwork").toString)
+    writeInvocation(raw, first)
+    StatefulParse.run(spark, raw, s"$work/landing", s"$work/ckpt/parse").awaitTermination()
+    assert(Files.isDirectory(Paths.get(work, "ckpt", "parse", "state")))
+    writeInvocation(raw, second)
+    graft.Jobs.parse(spark, raw, work)
+    assert(Files.notExists(Paths.get(work, "ckpt", "parse", "state")))
+
+    val (raw2, work2) = (Files.createTempDirectory("upraw2").toString, Files.createTempDirectory("upwork2").toString)
+    writeInvocation(raw2, first)
+    graft.Jobs.parse(spark, raw2, work2)
+    writeInvocation(raw2, second)
+    graft.Jobs.parse(spark, raw2, work2)
+    assert(landingRows(s"$work/landing") === landingRows(s"$work2/landing"))
   }
 
   test("streamingDedup drops same-key duplicates across micro-batches") {
